@@ -8,9 +8,13 @@ a cold pass over the full tagged unions takes ~57 s on 4 cores, more than
 one run of this benchmark can spend. Slots run in the list's order: every
 run starts a fresh JVM, so the first slots pay shared first-use costs,
 and a seed-permuted order moved those costs between slots and made the
-slot-latency median swing with the seed. Every slot output is checked
-against its ``oracle_sql()`` entry, restricted to the branch's tag, the
-way ``tools/compare.py --exact`` compares.
+slot-latency median swing with the seed. A run makes two passes, a cold
+and a warm one (see ``ROUND_S`` in ``run.py``), and both are timed: the
+median over the slot latencies of one pass swung with the host's slow
+spells and, in a cold pass, with which side of a gap the middle slots fell
+on. Every slot output is checked against its ``oracle_sql()`` entry,
+restricted to the branch's tag, the way ``tools/compare.py --exact``
+compares.
 """
 
 from __future__ import annotations

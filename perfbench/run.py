@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload project_query --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload project_query --seed 1 --seconds 40 --trace 0
 
 Workloads (see perfbench/README.md): ``project_query`` and
 ``headline_mix``. Every run starts its own Spark driver JVM on
@@ -40,8 +40,9 @@ def _workloads():
 
 
 #: nominal seconds of one round; a run does seconds // round_s rounds
-#: (at least one), so every run of a workload does the same work
-ROUND_S = {"project_query": 30.0, "headline_mix": 25.0}
+#: (at least one), so every run of a workload does the same work: at 40 s
+#: one project_query round and two headline_mix passes (cold, then warm)
+ROUND_S = {"project_query": 30.0, "headline_mix": 20.0}
 
 
 def _start_spark(run_dir: str):

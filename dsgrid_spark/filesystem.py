@@ -8,6 +8,16 @@ can read parquet from (file://, hdfs://, s3a://, gs://, abfss://) gets
 metadata/text IO through the SAME JVM connector and credential chain the
 parquet scans use — no second cloud SDK, no separate auth path.
 
+Users: the registry (``registry/store.py``, ``registry/locking.py``),
+``sources.writers.compact_parquet``, the CLI, and every persisted index
+under ``pipeline/`` — batch logs, meta/stats rows, intents, locks,
+generation tables, fsck/vacuum listings and the index mirror all touch
+storage only through this interface (the one exception is
+``pipeline/indexsync._copy_tree``'s cross-scheme bulk copy, which
+:meth:`FilesystemInterface.copy_tree` leaves out of scope).
+:func:`filesystem_for` is the one place that maps a path to an
+implementation.
+
 Usage for an object-store deployment::
 
     spark.conf.set("spark.hadoop.fs.s3a.endpoint", "https://minio.internal:9000")
@@ -27,15 +37,34 @@ version directories are never rewritten.
 
 from __future__ import annotations
 
+import errno
+import glob as _glob
+import os
 import shutil
+import stat
+import weakref
 from abc import ABC, abstractmethod
 from pathlib import Path
+from typing import NamedTuple
 from urllib.parse import urlparse
+
+
+class FileStatus(NamedTuple):
+    """One :meth:`FilesystemInterface.glob` match."""
+
+    path: str
+    is_dir: bool
+    mtime_ms: int
+
+    @property
+    def name(self) -> str:
+        return self.path.rstrip("/").rsplit("/", 1)[-1]
 
 
 class FilesystemInterface(ABC):
     """Reference filesystem_interface.py surface, trimmed to what the
-    registry needs."""
+    registry and the index pipeline need. ``read_bytes``/``write_bytes``
+    are each implementation's one IO primitive; text IO wraps them."""
 
     @abstractmethod
     def exists(self, path: str) -> bool: ...
@@ -47,22 +76,39 @@ class FilesystemInterface(ABC):
     def listdir(self, path: str) -> list[str]: ...
 
     @abstractmethod
-    def rm_tree(self, path: str) -> None: ...
+    def rm_tree(self, path: str) -> None:
+        """Delete a file or a directory tree; a missing path is a
+        no-op."""
+        ...
 
     @abstractmethod
-    def rename(self, src: str, dst: str) -> bool: ...
+    def rename(self, src: str, dst: str) -> bool:
+        """Move ``src`` to ``dst``; False (nothing moved) when ``src``
+        is missing or ``dst`` is a non-empty directory."""
+        ...
 
     @abstractmethod
-    def read_text(self, path: str) -> str: ...
+    def read_bytes(self, path: str) -> bytes: ...
 
     @abstractmethod
-    def write_text(self, path: str, text: str) -> None: ...
+    def write_bytes(self, path: str, data: bytes) -> None:
+        """Create or truncate ``path`` (parent dirs included)."""
+        ...
+
+    @abstractmethod
+    def glob(self, pattern: str) -> list[FileStatus]:
+        """Matches of a ``*``/``[...]`` pattern, sorted by path; a
+        wildcard never matches a name starting with ``.`` (hidden temp
+        files and Hadoop checksum files) unless the pattern component
+        itself starts with ``.``. No match -> ``[]``."""
+        ...
 
     @abstractmethod
     def list_sizes(self, path: str) -> list[tuple[str, int]]:
-        """Recursive (file_path, bytes) listing of DATA files — names
-        starting with '_' or '.' (markers, checksums, staging) are
-        skipped, matching what Spark's readers ignore."""
+        """Recursive (path relative to ``path``, bytes) listing of DATA
+        files, sorted — names starting with '_' or '.' (markers,
+        checksums, staging) are skipped, matching what Spark's readers
+        ignore. A missing path lists as ``[]``."""
         ...
 
     @abstractmethod
@@ -73,13 +119,19 @@ class FilesystemInterface(ABC):
         ...
 
     @abstractmethod
-    def create_exclusive(self, path: str, text: str) -> bool:
+    def create_exclusive(self, path: str, text: str = "") -> bool:
         """Create ``path`` with ``text`` ONLY if it does not exist;
         returns False (without writing) when it already does. Atomic on
         local/HDFS; best-effort on object stores whose create is
         last-writer-wins — callers needing a hard guarantee must verify
         by reading back (see registry/locking.py)."""
         ...
+
+    def read_text(self, path: str) -> str:
+        return self.read_bytes(path).decode("utf-8")
+
+    def write_text(self, path: str, text: str) -> None:
+        self.write_bytes(path, text.encode("utf-8"))
 
 
 class LocalFilesystem(FilesystemInterface):
@@ -104,23 +156,49 @@ class LocalFilesystem(FilesystemInterface):
             shutil.rmtree(p)
         elif p.exists():
             p.unlink()
+            # a file Spark wrote through Hadoop's checksummed local FS
+            # has a hidden .<name>.crc sibling, which a Hadoop delete
+            # removes with it
+            p.with_name(f".{p.name}.crc").unlink(missing_ok=True)
 
     def rename(self, src: str, dst: str) -> bool:
-        self._p(src).replace(self._p(dst))
+        try:
+            os.replace(self._p(src), self._p(dst))
+        except (FileNotFoundError, IsADirectoryError, NotADirectoryError):
+            return False
+        except OSError as e:
+            if e.errno in (errno.ENOTEMPTY, errno.EEXIST):
+                return False
+            raise
         return True
 
-    def read_text(self, path: str) -> str:
-        return self._p(path).read_text()
+    def read_bytes(self, path: str) -> bytes:
+        return self._p(path).read_bytes()
 
-    def write_text(self, path: str, text: str) -> None:
-        self._p(path).write_text(text)
+    def write_bytes(self, path: str, data: bytes) -> None:
+        p = self._p(path)
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_bytes(data)
+
+    def glob(self, pattern: str) -> list[FileStatus]:
+        out = []
+        for p in sorted(_glob.glob(str(self._p(pattern)))):
+            try:
+                st = os.stat(p)
+            except FileNotFoundError:  # deleted since the listing
+                continue
+            out.append(FileStatus(p, stat.S_ISDIR(st.st_mode),
+                                  st.st_mtime_ns // 1_000_000))
+        return out
 
     def list_sizes(self, path: str) -> list[tuple[str, int]]:
+        root = self._p(path)
         out = []
-        for p in sorted(self._p(path).rglob("*")):
+        for p in root.rglob("*"):
             if p.is_file() and not p.name.startswith(("_", ".")):
-                out.append((str(p), p.stat().st_size))
-        return out
+                out.append((p.relative_to(root).as_posix(),
+                            p.stat().st_size))
+        return sorted(out)
 
     def copy_tree(self, src: str, dst: str) -> None:
         s, d = self._p(src), self._p(dst)
@@ -130,9 +208,7 @@ class LocalFilesystem(FilesystemInterface):
         else:
             shutil.copy2(s, d)
 
-    def create_exclusive(self, path: str, text: str) -> bool:
-        import os
-
+    def create_exclusive(self, path: str, text: str = "") -> bool:
         p = self._p(path)
         p.parent.mkdir(parents=True, exist_ok=True)
         try:
@@ -144,6 +220,21 @@ class LocalFilesystem(FilesystemInterface):
         finally:
             os.close(fd)
         return True
+
+
+def _wildcard_hides(pattern: str, path: str) -> bool:
+    """True when a wildcard component of ``pattern`` matched a
+    ``.``-prefixed name in ``path`` — the Python-glob rule
+    :meth:`FilesystemInterface.glob` promises, applied to Hadoop's
+    globStatus (which matches such names). Glob results have one
+    component per pattern component, so they align from the end."""
+    pat = pattern.rstrip("/").split("/")
+    got = path.rstrip("/").split("/")
+    for pc, gc in zip(reversed(pat), reversed(got)):
+        if (gc.startswith(".") and not pc.startswith(".")
+                and any(ch in pc for ch in "*?[{")):
+            return True
+    return False
 
 
 class HadoopFilesystem(FilesystemInterface):
@@ -177,31 +268,50 @@ class HadoopFilesystem(FilesystemInterface):
         self._fs.delete(self._path(path), True)
 
     def rename(self, src: str, dst: str) -> bool:
-        return bool(self._fs.rename(self._path(src), self._path(dst)))
+        try:
+            return bool(self._fs.rename(self._path(src), self._path(dst)))
+        except Exception as e:  # the local FS raises where HDFS says False
+            if "FileNotFoundException" in str(e):
+                return False
+            raise
 
-    def read_text(self, path: str) -> str:
+    def read_bytes(self, path: str) -> bytes:
         stream = self._fs.open(self._path(path))
         try:
-            return str(self._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"))
+            return bytes(self._jvm.org.apache.commons.io.IOUtils
+                         .toByteArray(stream))
         finally:
             stream.close()
 
-    def write_text(self, path: str, text: str) -> None:
+    def write_bytes(self, path: str, data: bytes) -> None:
         out = self._fs.create(self._path(path), True)
         try:
-            out.write(bytearray(text.encode("utf-8")))
+            out.write(bytearray(data))
         finally:
             out.close()
 
+    def glob(self, pattern: str) -> list[FileStatus]:
+        out = []
+        for st in self._fs.globStatus(self._path(pattern)) or []:
+            p = str(st.getPath().toString())
+            if not _wildcard_hides(pattern, p):
+                out.append(FileStatus(p, bool(st.isDirectory()),
+                                      int(st.getModificationTime())))
+        return sorted(out)
+
     def list_sizes(self, path: str) -> list[tuple[str, int]]:
-        it = self._fs.listFiles(self._path(path), True)
+        root = self._path(path)
+        if not self._fs.exists(root):
+            return []
+        base = str(self._fs.getFileStatus(root).getPath().toString())
+        it = self._fs.listFiles(root, True)
         out = []
         while it.hasNext():
             st = it.next()
-            name = st.getPath().getName()
-            if not name.startswith(("_", ".")):
-                out.append((str(st.getPath().toString()), int(st.getLen())))
+            full = str(st.getPath().toString())
+            if not st.getPath().getName().startswith(("_", ".")):
+                out.append((full[len(base.rstrip("/")) + 1:],
+                            int(st.getLen())))
         return sorted(out)
 
     def copy_tree(self, src: str, dst: str) -> None:
@@ -211,7 +321,7 @@ class HadoopFilesystem(FilesystemInterface):
             False, conf,
         )
 
-    def create_exclusive(self, path: str, text: str) -> bool:
+    def create_exclusive(self, path: str, text: str = "") -> bool:
         # FileSystem.create(path, overwrite=False) throws
         # FileAlreadyExistsException when the path exists — atomic on
         # HDFS; on S3A the existence check races (document at the caller).
@@ -228,11 +338,29 @@ class HadoopFilesystem(FilesystemInterface):
         return True
 
 
+_LOCAL = LocalFilesystem()
+#: per-session resolution state: the ``fs.defaultFS`` scheme and one
+#: HadoopFilesystem per (scheme, authority)
+_SESSION_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
 def filesystem_for(spark, root: str) -> FilesystemInterface:
-    """Pick the implementation from the root's scheme (reference
-    filesystem factory): bare paths and file:// stay on fast local IO;
-    any other scheme goes through the Hadoop connector."""
-    scheme = urlparse(str(root)).scheme
-    if scheme in ("", "file"):
-        return LocalFilesystem()
-    return HadoopFilesystem(spark, root)
+    """Pick the implementation from the path's scheme (reference
+    filesystem factory): file:// stays on fast local IO, any other
+    scheme goes through the Hadoop connector, and a bare path resolves
+    against the session's ``fs.defaultFS`` — the filesystem Spark's own
+    reads and writes of that path use (local on a laptop, HDFS on an
+    HDFS-default cluster). Cached per session."""
+    cache = _SESSION_CACHE.setdefault(spark, {})
+    u = urlparse(str(root))
+    if not u.scheme:
+        if "default" not in cache:
+            cache["default"] = urlparse(spark._jsc.hadoopConfiguration().get(
+                "fs.defaultFS", "file:///"))
+        u = cache["default"]
+    if u.scheme == "file":
+        return _LOCAL
+    key = (u.scheme, u.netloc)
+    if key not in cache:
+        cache[key] = HadoopFilesystem(spark, f"{u.scheme}://{u.netloc}/")
+    return cache[key]

@@ -36,9 +36,9 @@ the marker, the log-size-derived id would drift and the crashed
 attempt's orphans would never be cleaned. The marker is removed when
 the batch commits.
 
-Partition deletion goes through the Hadoop FileSystem API (via the
-JVM gateway), so it works on any Spark-supported filesystem, not just
-``file://``.
+Every storage call here — deletion, listing, the log and meta rows,
+intents, locks — goes through :mod:`dsgrid_spark.filesystem`, so the
+same code serves local paths and any Hadoop-FS scheme (hdfs://, s3a://).
 
 COMPACTION (:func:`compact`) merges many small committed batch
 directories into one coalesced batch — the antidote to the small-files
@@ -68,6 +68,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from dsgrid_spark import filesystem
 
 _BATCH_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 
@@ -147,59 +149,27 @@ def check_batch_id(batch_id: str) -> str:
 
 
 def delete_glob(spark: SparkSession, pattern: str) -> int:
-    """Recursively delete every path matching a Hadoop glob; returns the
+    """Recursively delete every path matching a glob; returns the
     number of paths removed (0 when nothing matched)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(pattern)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    matches = fs.globStatus(jpath)
-    n = 0
-    for st in (matches or []):
-        fs.delete(st.getPath(), True)
-        n += 1
-    return n
+    fs = filesystem.filesystem_for(spark, pattern)
+    matches = fs.glob(pattern)
+    for st in matches:
+        fs.rm_tree(st.path)
+    return len(matches)
 
 
 # ---------------------------------------------------------------------------
-# Driver-side metadata IO (r13, guide §5/§1.2): every batch-log row,
-# meta/stats row and committed-set resolution used to be a full Spark
-# job — a 1-task parquet write with the whole FileSource commit protocol
-# (temp dir, task file, rename, _SUCCESS), or a 1-2-task scan+collect —
-# measured 0.15-0.5 s EACH on local[32], times 2-4 per index build and
-# 2 per search call (q32 'bdf': 1.25 s of its 2.7 s warm path; q30
-# 'store' pays the same around its sigstore build). These files are
-# driver-bounded BY CONSTRUCTION (one row per batch / one meta row), so
-# the driver reads and writes them directly with pyarrow when the index
-# lives on the local filesystem, and falls back to the Spark path
-# verbatim on any other scheme (hdfs/s3a keep the cluster-FS story).
-# Atomicity matches the Spark writer: appends land as a hidden temp
-# file renamed into place (readers never see a partial file);
-# overwrites build a sibling temp dir and swap.
-
-_DEFAULT_FS_CACHE: dict[int, str] = {}
-
-
-def _meta_local_dir(spark: SparkSession, path: str) -> str | None:
-    """Local-filesystem directory for ``path`` when it resolves to the
-    local FS (explicit ``file:`` scheme, or no scheme under a ``file:``
-    default FS), else None — the driver-side metadata fast path only
-    applies where the driver can touch the files directly."""
-    from urllib.parse import urlparse
-    u = urlparse(path)
-    if u.scheme == "file":
-        return u.path
-    if u.scheme:
-        return None
-    key = id(spark._jsc)
-    fsdef = _DEFAULT_FS_CACHE.get(key)
-    if fsdef is None:
-        try:
-            fsdef = spark._jsc.hadoopConfiguration().get(
-                "fs.defaultFS", "file:///")
-        except Exception:
-            return None
-        _DEFAULT_FS_CACHE[key] = fsdef
-    return path if fsdef.startswith("file:") else None
+# Driver-side metadata IO: batch-log, compaction-log, meta/stats,
+# centroid/codebook and drift rows are driver-bounded BY CONSTRUCTION
+# (one row per batch, one meta row, K centroids), so the driver encodes
+# and decodes them with pyarrow in memory and moves the bytes through
+# the filesystem interface — no Spark job or FileSource commit protocol
+# per one-row file (those cost 0.15-0.5 s each). The layout is the one
+# Spark's parquet writer produces (``partitionBy`` directory levels,
+# snappy part files), so Spark reads what the driver writes and the
+# reverse. Atomicity matches the Spark writer: appends land as a
+# hidden temp file renamed into place (readers never see a partial
+# file); overwrites build a sibling temp dir and swap.
 
 
 def _partition_value(raw: str):
@@ -217,50 +187,43 @@ def _partition_value(raw: str):
         return raw
 
 
-def read_meta_rows(spark: SparkSession, dirpath: str):
+def read_meta_rows(spark: SparkSession, dirpath: str) -> list[dict]:
     """Driver-side read of a SMALL parquet metadata directory: the
     batch log (one row per batch), the compaction log, meta/stats rows.
 
     Returns a list of dicts (hive ``k=v`` partition levels resolved
     like Spark resolves them, keys normalized across files with missing
     columns read as None — the ``mergeSchema`` behavior the log readers
-    rely on), or None when the path is not on the local filesystem
-    (callers fall back to ``spark.read``). Raises FileNotFoundError
-    when the directory is missing or holds no data files, mirroring
-    spark.read.parquet's analysis error so existing try/except call
-    sites keep their semantics. NOT for data-scale tables — postings/
-    sigs/codebooks stay on the scan path."""
-    loc = _meta_local_dir(spark, dirpath)
-    if loc is None:
-        return None
-    import os as _os
-
+    rely on). Raises FileNotFoundError when the directory is missing or
+    holds no data files, mirroring spark.read.parquet's analysis error.
+    NOT for data-scale tables — postings/sigs/codes stay on the scan
+    path."""
+    import pyarrow as pa
     import pyarrow.parquet as _pq
 
+    fs = filesystem.filesystem_for(spark, dirpath)
     rows: list[dict] = []
     n_files = 0
 
     def _walk(d: str, extra: dict) -> None:
         nonlocal n_files
-        for name in sorted(_os.listdir(d)):
-            if name.startswith((".", "_")):
+        for st in fs.glob(f"{d}/*"):  # '.'-names never match
+            if st.name.startswith("_"):
                 continue
-            p = _os.path.join(d, name)
-            if _os.path.isdir(p):
-                if "=" in name:
-                    k, _, v = name.partition("=")
-                    _walk(p, {**extra, k: _partition_value(v)})
+            if st.is_dir:
+                if "=" in st.name:
+                    k, _, v = st.name.partition("=")
+                    _walk(st.path, {**extra, k: _partition_value(v)})
                 continue
-            if not name.endswith(".parquet"):
+            if not st.name.endswith(".parquet"):
                 continue
             n_files += 1
-            for r in _pq.read_table(p).to_pylist():
+            table = _pq.read_table(pa.BufferReader(fs.read_bytes(st.path)))
+            for r in table.to_pylist():
                 r.update(extra)
                 rows.append(r)
 
-    if not _os.path.isdir(loc):
-        raise FileNotFoundError(dirpath)
-    _walk(loc, {})
+    _walk(dirpath.rstrip("/"), {})
     if n_files == 0:
         raise FileNotFoundError(f"no parquet data files under {dirpath}")
     keys = set()
@@ -273,9 +236,8 @@ def read_meta_rows(spark: SparkSession, dirpath: str):
 
 
 def _pa_schema(schema_ddl: str):
-    """pyarrow schema for a DDL of scalar (or array-of-scalar) fields,
-    or None when a type has no mapping (caller falls back to the Spark
-    writer)."""
+    """pyarrow schema for a DDL of scalar (or array-of-scalar) fields;
+    ValueError when the DDL does not parse or a type has no mapping."""
     import pyarrow as pa
     from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
                                    ByteType, DoubleType, FloatType,
@@ -283,8 +245,9 @@ def _pa_schema(schema_ddl: str):
                                    StringType, StructType)
     try:
         st = StructType.fromDDL(schema_ddl)
-    except Exception:
-        return None
+    except Exception as exc:
+        raise ValueError(f"unparseable metadata schema {schema_ddl!r}") \
+            from exc
     mapping = {LongType: pa.int64(), IntegerType: pa.int32(),
                ShortType: pa.int16(), ByteType: pa.int8(),
                DoubleType: pa.float64(), FloatType: pa.float32(),
@@ -299,17 +262,19 @@ def _pa_schema(schema_ddl: str):
         else:
             t = mapping.get(type(dt))
         if t is None:
-            return None
+            raise ValueError(
+                f"metadata column {f.name!r} has type "
+                f"{dt.simpleString()}, which has no parquet mapping here")
         fields.append(pa.field(f.name, t))
     return pa.schema(fields)
 
 
 def write_meta_rows(spark: SparkSession, dirpath: str, rows,
                     schema_ddl: str,
-                    partition: tuple[str, str] | None = None) -> bool:
-    """Driver-side parquet write of a BOUNDED metadata row set; returns
-    False when the fast path doesn't apply (non-local FS, unmappable
-    type) and the caller must run the Spark write it replaces.
+                    partition: tuple[str, str] | None = None) -> None:
+    """Driver-side parquet write of a BOUNDED metadata row set (tuples
+    in ``schema_ddl`` order). Raises ValueError — before writing
+    anything — when a DDL type has no mapping or a row does not fit.
 
     ``partition=None``: overwrite ``dirpath`` (sibling temp dir built
     first, then swapped — the same not-yet-visible-until-complete
@@ -318,43 +283,37 @@ def write_meta_rows(spark: SparkSession, dirpath: str, rows,
     hidden temp file renamed into place so readers never observe a
     partial file — the partition column stays in the directory name
     only, exactly as ``partitionBy`` writes it."""
-    loc = _meta_local_dir(spark, dirpath)
-    if loc is None:
-        return False
-    schema = _pa_schema(schema_ddl)
-    if schema is None:
-        return False
-    import os as _os
     import uuid as _uuid
 
     import pyarrow as pa
     import pyarrow.parquet as _pq
 
+    schema = _pa_schema(schema_ddl)
     rows = [tuple(r) for r in rows]
     try:
-        cols = {f.name: pa.array([r[i] for r in rows], type=f.type)
-                for i, f in enumerate(schema)}
-    except (pa.ArrowInvalid, pa.ArrowTypeError, IndexError):
-        return False
-    table = pa.table(cols, schema=schema)
+        table = pa.table({f.name: pa.array([r[i] for r in rows], type=f.type)
+                          for i, f in enumerate(schema)}, schema=schema)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, IndexError) as exc:
+        raise ValueError(f"metadata rows do not fit {schema_ddl!r}: "
+                         f"{exc}") from exc
+    sink = pa.BufferOutputStream()
+    _pq.write_table(table, sink, compression="snappy")
+    data = sink.getvalue().to_pybytes()
+    fs = filesystem.filesystem_for(spark, dirpath)
     token = _uuid.uuid4().hex[:12]
-    if partition is not None:
+    if partition is None:
+        tmp = f"{dirpath}__tmp_{token}"
+        fs.write_bytes(f"{tmp}/part-00000-{token}.parquet", data)
+        fs.rm_tree(dirpath)
+        final = dirpath
+    else:
         col, value = partition
-        pdir = _os.path.join(loc, f"{col}={value}")
-        _os.makedirs(pdir, exist_ok=True)
-        tmp = _os.path.join(pdir, f".part-{token}.parquet.tmp")
-        _pq.write_table(table, tmp, compression="snappy")
-        _os.rename(tmp, _os.path.join(pdir, f"part-00000-{token}.parquet"))
-        return True
-    tmpdir = f"{loc}__tmp_{token}"
-    _os.makedirs(tmpdir)
-    _pq.write_table(table, _os.path.join(tmpdir, f"part-00000-{token}.parquet"),
-                    compression="snappy")
-    if _os.path.isdir(loc):
-        import shutil as _shutil
-        _shutil.rmtree(loc)
-    _os.rename(tmpdir, loc)
-    return True
+        pdir = f"{dirpath}/{col}={value}"
+        tmp = f"{pdir}/.part-{token}.parquet.tmp"
+        fs.write_bytes(tmp, data)
+        final = f"{pdir}/part-00000-{token}.parquet"
+    if not fs.rename(tmp, final):
+        raise IOError(f"rename failed: {tmp} -> {final}")
 
 
 def _log_path(index_path: str) -> str:
@@ -371,9 +330,6 @@ def _raw_logged(spark: SparkSession, index_path: str) -> set[str]:
     :func:`committed_batches`)."""
     try:
         rows = read_meta_rows(spark, _log_path(index_path))
-        if rows is None:
-            rows = (spark.read.parquet(_log_path(index_path))
-                    .select("batch").distinct().collect())
     except Exception:
         return set()
     return {r["batch"] for r in rows}
@@ -382,27 +338,10 @@ def _raw_logged(spark: SparkSession, index_path: str) -> set[str]:
 def _replacements(spark: SparkSession, index_path: str) -> list[tuple]:
     """(replaced, by) pairs from the compaction log ([] when none).
 
-    Existence is probed with one FileSystem call first: most indexes
-    are never compacted, and letting the parquet read throw would cost
-    a full analysis failure plus a noisy stack-trace WARN on EVERY
-    committed-batch resolution."""
-    cp = _compactions_path(index_path)
-    loc = _meta_local_dir(spark, cp)
-    if loc is not None:
-        import os as _os
-        if not _os.path.isdir(loc):
-            return []
-        try:
-            rows = read_meta_rows(spark, cp)
-            return [(r["replaced"], r["by"]) for r in rows]
-        except Exception:
-            return []
-    jp = spark._jvm.org.apache.hadoop.fs.Path(cp)
-    if not jp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jp):
-        return []
+    Most indexes are never compacted: the missing directory reads as
+    no pairs."""
     try:
-        rows = (spark.read.parquet(cp)
-                .select("replaced", "by").collect())
+        rows = read_meta_rows(spark, _compactions_path(index_path))
     except Exception:
         return []
     return [(r["replaced"], r["by"]) for r in rows]
@@ -507,12 +446,9 @@ def resolve_as_of(spark: SparkSession, index_path: str,
     # purge finishes the deletion and this check then fails the pin
     # loudly.
     retired_in_pin = _retired(raw, pairs) & pin
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    fs = filesystem.filesystem_for(spark, index_path)
     for bid in sorted(retired_in_pin):
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/*/*/batch={bid}")
-        if not list(p.getFileSystem(conf).globStatus(p) or []):
+        if not fs.glob(f"{index_path}/*/*/batch={bid}"):
             raise ValueError(
                 f"as_of batch {bid!r} was replaced and its data has "
                 f"been purged (crashed purge left its log row); the "
@@ -557,11 +493,7 @@ def resolve_timestamp(spark: SparkSession, index_path: str,
     t_ms = _parse_as_of_ms(as_of)
     try:
         rows = read_meta_rows(spark, _log_path(index_path))
-        if rows is None:
-            rows = (spark.read.option("mergeSchema", "true")
-                    .parquet(_log_path(index_path))
-                    .select("batch", "committed_at_ms").collect())
-        elif rows and "committed_at_ms" not in rows[0]:
+        if rows and "committed_at_ms" not in rows[0]:
             raise KeyError("committed_at_ms")
     except Exception:
         raise ValueError(
@@ -650,15 +582,9 @@ def log_snapshot(spark: SparkSession, index_path: str,
         as_of = resolve_timestamp(spark, index_path, as_of)
     try:
         rows = read_meta_rows(spark, _log_path(index_path))
-        if rows is None:
-            rows = (spark.read.parquet(_log_path(index_path))
-                    .select("batch", *columns).collect())
-        else:
-            for c in columns:
-                if rows and c not in rows[0]:
-                    # a column absent from EVERY log file — the Spark
-                    # select would throw here too
-                    raise KeyError(c)
+        for c in columns:
+            if rows and c not in rows[0]:
+                raise KeyError(c)  # absent from EVERY log file
     except Exception:
         if as_of is not None:
             raise ValueError("as_of given but the index has no batch "
@@ -699,11 +625,9 @@ def _intents_path(index_path: str) -> str:
 def open_intents(spark: SparkSession, index_path: str) -> set[str]:
     """Batch ids with an intent marker on disk (reserved, possibly
     in-flight or crashed)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{_intents_path(index_path)}/*")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    matches = fs.globStatus(jpath)
-    return {st.getPath().getName() for st in (matches or [])}
+    pattern = f"{_intents_path(index_path)}/*"
+    return {st.name
+            for st in filesystem.filesystem_for(spark, pattern).glob(pattern)}
 
 
 def claim_auto_batch_id(spark: SparkSession, index_path: str,
@@ -738,11 +662,8 @@ def claim_auto_batch_id(spark: SparkSession, index_path: str,
     while f"{prefix}{n:06d}" in taken:
         n += 1
     batch_id = f"{prefix}{n:06d}"
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(
-        f"{_intents_path(index_path)}/{batch_id}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(jpath)
+    marker = f"{_intents_path(index_path)}/{batch_id}"
+    filesystem.filesystem_for(spark, marker).mkdirs(marker)
     return batch_id
 
 
@@ -751,6 +672,12 @@ def clear_intent(spark: SparkSession, index_path: str,
     """Drop a batch's intent marker (call after ``log_batch``; a no-op
     for caller-named batches that never claimed one)."""
     delete_glob(spark, f"{_intents_path(index_path)}/{batch_id}")
+
+
+def _mtime(fs, pattern: str) -> int | None:
+    """Latest modification time (epoch ms) among the glob's matches;
+    None when nothing matches."""
+    return max((st.mtime_ms for st in fs.glob(pattern)), default=None)
 
 
 def _lock_path(index_path: str, name: str) -> str:
@@ -782,18 +709,15 @@ def acquire_compact_lock(spark: SparkSession, index_path: str,
     """
     import time as _time
 
-    jvm = spark._jvm
-    lp = jvm.org.apache.hadoop.fs.Path(_lock_path(index_path, name))
-    fs = lp.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(lp.getParent())
-    if fs.createNewFile(lp):
+    lp = _lock_path(index_path, name)
+    fs = filesystem.filesystem_for(spark, lp)
+    if fs.create_exclusive(lp):
         return
     cutoff = _time.time() * 1000.0 - ttl_seconds * 1000.0
-    try:
-        seen = fs.getFileStatus(lp).getModificationTime()
-    except Exception:
+    seen = _mtime(fs, lp)
+    if seen is None:
         # holder released between our create and stat: one retry
-        if fs.createNewFile(lp):
+        if fs.create_exclusive(lp):
             return
         raise ConcurrentCompactionError(
             f"another compaction holds {_lock_path(index_path, name)}")
@@ -810,9 +734,7 @@ def acquire_compact_lock(spark: SparkSession, index_path: str,
     # mtime re-check still catches a lock re-acquired between our stat
     # and our rename — that one is handed straight back.
     import os as _os
-    tomb = jvm.org.apache.hadoop.fs.Path(
-        f"{_lock_path(index_path, name)}.broken-{_os.getpid()}-"
-        f"{_time.monotonic_ns()}")
+    tomb = f"{lp}.broken-{_os.getpid()}-{_time.monotonic_ns()}"
     try:
         won = fs.rename(lp, tomb)
     except Exception:
@@ -821,11 +743,7 @@ def acquire_compact_lock(spark: SparkSession, index_path: str,
         raise ConcurrentCompactionError(
             f"lost the race breaking stale lock "
             f"{_lock_path(index_path, name)}")
-    try:
-        t_mtime = fs.getFileStatus(tomb).getModificationTime()
-    except Exception:
-        t_mtime = None
-    if t_mtime != seen:
+    if _mtime(fs, tomb) != seen:
         # we displaced a freshly re-acquired LIVE lock: restore it
         restored = False
         try:
@@ -844,8 +762,8 @@ def acquire_compact_lock(spark: SparkSession, index_path: str,
         raise ConcurrentCompactionError(
             f"lock {_lock_path(index_path, name)} was re-acquired "
             f"while being broken")
-    fs.delete(tomb, False)
-    if not fs.createNewFile(lp):
+    fs.rm_tree(tomb)
+    if not fs.create_exclusive(lp):
         raise ConcurrentCompactionError(
             f"lost the race re-claiming stale lock "
             f"{_lock_path(index_path, name)}")
@@ -871,13 +789,10 @@ def block_appends(spark: SparkSession, index_path: str) -> None:
     (``rebalance_index(..., block_appends=True)``). Idempotent; the
     marker's mtime is refreshed so a leftover stale marker becomes
     live again for this run."""
-    jvm = spark._jvm
-    lp = jvm.org.apache.hadoop.fs.Path(
-        _lock_path(index_path, APPEND_BLOCK_NAME))
-    fs = lp.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(lp.getParent())
-    fs.delete(lp, False)
-    fs.createNewFile(lp)
+    lp = _lock_path(index_path, APPEND_BLOCK_NAME)
+    fs = filesystem.filesystem_for(spark, lp)
+    fs.rm_tree(lp)
+    fs.create_exclusive(lp)
 
 
 def unblock_appends(spark: SparkSession, index_path: str) -> None:
@@ -895,13 +810,9 @@ def check_appends_allowed(spark: SparkSession, index_path: str,
     cost of the enforced-quiescence mode."""
     import time as _time
 
-    jvm = spark._jvm
-    lp = jvm.org.apache.hadoop.fs.Path(
-        _lock_path(index_path, APPEND_BLOCK_NAME))
-    fs = lp.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        mtime = fs.getFileStatus(lp).getModificationTime()
-    except Exception:
+    lp = _lock_path(index_path, APPEND_BLOCK_NAME)
+    mtime = _mtime(filesystem.filesystem_for(spark, lp), lp)
+    if mtime is None:
         return  # no marker: appends allowed
     if mtime >= _time.time() * 1000.0 - ttl_seconds * 1000.0:
         raise AppendsBlockedError(
@@ -974,19 +885,9 @@ def log_batch(spark: SparkSession, index_path: str, batch_id: str,
     metrics = {"committed": 1,
                "committed_at_ms": int(_time.time() * 1000), **metrics}
     cols = sorted(metrics)
-    # r13: the one-row log write goes through the driver-side metadata
-    # writer (no Spark job, no commit protocol — atomic temp+rename
-    # into the batch dir); the Spark write remains the non-local path
-    vals = tuple(int(metrics[c]) for c in cols)
-    if write_meta_rows(spark, lp, [vals],
-                       ", ".join(f"{c} long" for c in cols),
-                       partition=("batch", batch_id)):
-        return
-    row = [vals + (batch_id,)]
-    schema = ", ".join([f"{c} long" for c in cols] + ["batch string"])
-    from dsgrid_spark.session import one_slice_df
-    (one_slice_df(spark, row, schema)
-       .write.mode("append").partitionBy("batch").parquet(lp))
+    write_meta_rows(spark, lp, [tuple(int(metrics[c]) for c in cols)],
+                    ", ".join(f"{c} long" for c in cols),
+                    partition=("batch", batch_id))
 
 
 def logged_totals(spark: SparkSession, index_path: str,
@@ -1046,8 +947,9 @@ def fsck(spark: SparkSession, index_path: str,
     grace), dormant compaction rows (a crashed compaction's inert
     replacement pairs), live locks younger than the ttl.
 
-    Cost: FileSystem listings plus one collect of the one-row-per-batch
-    log and the tiny meta/centroid tables — no payload scan. Returns
+    Cost: FileSystem listings plus driver-side reads of the
+    one-row-per-batch log and the tiny meta/centroid tables — no
+    payload scan. Returns
     ``{"ok": <no errors>, "kind", "errors", "warnings", "info"}``.
     """
     import time as _time
@@ -1066,12 +968,7 @@ def fsck(spark: SparkSession, index_path: str,
     info["visible_batches"] = len(visible)
     info["retired_batches"] = len(ingested - visible)
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _glob(pattern):
-        p = jvm.org.apache.hadoop.fs.Path(pattern)
-        return list(p.getFileSystem(conf).globStatus(p) or [])
+    fs = filesystem.filesystem_for(spark, index_path)
 
     # payload layout sanity (mixed partition columns refuse compaction
     # and signal a foreign write landed in the tree)
@@ -1084,8 +981,8 @@ def fsck(spark: SparkSession, index_path: str,
 
     # per-batch data-dir census over every payload subtree
     dirs_of: dict[str, int] = {}
-    for st in _glob(f"{index_path}/*/*/batch=*"):
-        bid = st.getPath().getName().split("=", 1)[1]
+    for st in fs.glob(f"{index_path}/*/*/batch=*"):
+        bid = st.name.split("=", 1)[1]
         dirs_of[bid] = dirs_of.get(bid, 0) + 1
     dataless = sorted(b for b in visible if dirs_of.get(b, 0) == 0)
     if dataless and raw:
@@ -1111,19 +1008,20 @@ def fsck(spark: SparkSession, index_path: str,
 
     # generation-dependent tables (vector kinds)
     if kind in ("ivf", "binary", "pq"):
-        from dsgrid_spark.pipeline.pq import (_read_centroids,
+        from dsgrid_spark.pipeline.pq import (_flat_codebook_files,
+                                              _read_centroids,
                                               _read_codebooks,
                                               codebook_generations)
         from dsgrid_spark.pipeline.rebalance import _flat_entries
 
         gens = centroid_generations(spark, index_path)
-        _, flat = _flat_entries(spark, _centroids_path(index_path))
-        flat_data = [st for st in flat
-                     if not st.getPath().getName().startswith(("_", "."))]
+        flat_data = [st for st in _flat_entries(spark,
+                                                _centroids_path(index_path))
+                     if not st.name.startswith("_")]
         if gens and flat_data:
             errors.append(
                 f"MIXED centroid layout: flat files "
-                f"{[str(s.getPath().getName()) for s in flat_data]} next "
+                f"{[st.name for st in flat_data]} next "
                 f"to generation dirs {sorted(gens)} — root-level "
                 f"partition discovery fails; a rebalance migrates this "
                 f"(or remove the flat files once a committed generation "
@@ -1143,10 +1041,7 @@ def fsck(spark: SparkSession, index_path: str,
         info["centroid_generation"] = gen
         if kind == "pq":
             marked = codebook_generations(spark, index_path)
-            _, cb_flat = _flat_entries(spark, f"{index_path}/codebooks")
-            cb_flat_data = [st for st in cb_flat if not
-                            st.getPath().getName().startswith(("_", "."))]
-            if marked and cb_flat_data:
+            if marked and _flat_codebook_files(spark, index_path):
                 # NOT an error: _read_codebooks reads flat-first (flat
                 # files are only removed after a retrain verifies both
                 # gen-scoped copies complete), so reads stay correct in
@@ -1169,11 +1064,7 @@ def fsck(spark: SparkSession, index_path: str,
                 "binary": "meta"}.get(kind)
     if meta_sub is not None:
         try:
-            rows = read_meta_rows(spark, f"{index_path}/{meta_sub}")
-            if rows is None:
-                spark.read.parquet(
-                    f"{index_path}/{meta_sub}").collect()[0]
-            elif not rows:
+            if not read_meta_rows(spark, f"{index_path}/{meta_sub}"):
                 raise ValueError("empty meta row set")
         except Exception:
             errors.append(f"missing or unreadable {meta_sub}/ row")
@@ -1181,11 +1072,10 @@ def fsck(spark: SparkSession, index_path: str,
     # locks / tombstones / append-block markers
     cutoff = _time.time() * 1000.0 - lock_ttl_seconds * 1000.0
     held, stale, tombs = [], [], []
-    for st in _glob(f"{index_path}/locks/*.lock"):
-        (stale if st.getModificationTime() < cutoff else held).append(
-            st.getPath().getName())
-    for st in _glob(f"{index_path}/locks/*.lock.broken-*"):
-        tombs.append(st.getPath().getName())
+    for st in fs.glob(f"{index_path}/locks/*.lock"):
+        (stale if st.mtime_ms < cutoff else held).append(st.name)
+    for st in fs.glob(f"{index_path}/locks/*.lock.broken-*"):
+        tombs.append(st.name)
     if stale:
         warnings.append(f"stale locks past lock_ttl_seconds (a crashed "
                         f"holder; vacuum reaps): {sorted(stale)}")
@@ -1206,6 +1096,37 @@ def _centroids_path(index_path: str) -> str:
     return f"{index_path}/centroids"
 
 
+#: the per-generation tables (``<sub>/batch=<establisher>``) that travel
+#: with a centroid generation marker, and their row schemas
+GENERATION_TABLES = {
+    "centroids": "cluster int, centroid array<double>, gen_src string",
+    "codebooks": "j int, i int, centroid array<double>",
+    "drift_baseline": "ratio double, n_sample int, n_clusters int, dim int",
+}
+
+
+def write_replacement(spark: SparkSession, index_path: str,
+                      sources: list[str], batch_id: str) -> dict[str, int]:
+    """Record ``batch_id`` as the replacement of ``sources`` — the
+    ``compactions/by=<batch_id>`` rows, inert until ``batch_id``'s log
+    row commits — and return the sources' summed log metrics for that
+    commit's :func:`log_batch`, so :func:`logged_totals` is invariant
+    under compaction and rebalance (the two callers)."""
+    write_meta_rows(spark, _compactions_path(index_path),
+                    [(s,) for s in sources], "replaced string",
+                    partition=("by", batch_id))
+    src = set(sources)
+    metrics: dict[str, int] = {}
+    for r in read_meta_rows(spark, _log_path(index_path)):
+        if r["batch"] not in src:
+            continue
+        for c, v in r.items():
+            if c in ("batch", "committed", "committed_at_ms") or v is None:
+                continue
+            metrics[c] = metrics.get(c, 0) + int(v)
+    return metrics
+
+
 def centroid_generations(spark: SparkSession,
                          index_path: str) -> set[str]:
     """Batch ids that ESTABLISHED a centroid generation — the initial
@@ -1213,12 +1134,9 @@ def centroid_generations(spark: SparkSession,
     i.e. the ``centroids/batch=<id>`` directory names. Empty for
     indexes without centroids (term, sigs) and for the legacy flat
     ``centroids/`` layout (pre-generation builds)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{_centroids_path(index_path)}/batch=*")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return {st.getPath().getName().split("=", 1)[1]
-            for st in (fs.globStatus(p) or [])}
+    pattern = f"{_centroids_path(index_path)}/batch=*"
+    return {st.name.split("=", 1)[1]
+            for st in filesystem.filesystem_for(spark, pattern).glob(pattern)}
 
 
 def resolve_generation(spark: SparkSession, index_path: str,
@@ -1269,22 +1187,15 @@ def _check_pin_generation(spark: SparkSession, index_path: str,
     effort by construction: batches or markers without recorded commit
     times (pre-commit-time layouts) are skipped rather than guessed."""
     try:
-        cent = (spark.read.option("mergeSchema", "true")
-                .parquet(_centroids_path(index_path))
-                .select("batch", "gen_src").distinct().collect())
-    except Exception:
-        return  # pre-identity marker layout: nothing to key on
-    src_of = {r["batch"]: r["gen_src"] for r in cent}
+        cent = read_meta_rows(spark, _centroids_path(index_path))
+        rows = read_meta_rows(spark, _log_path(index_path))
+    except FileNotFoundError:
+        return
+    src_of = {r.get("batch"): r.get("gen_src") for r in cent}
     identity = src_of.get(gen)
     if identity is None:
-        return
-    try:
-        rows = (spark.read.option("mergeSchema", "true")
-                .parquet(_log_path(index_path))
-                .select("batch", "committed_at_ms").collect())
-    except Exception:
-        return
-    at = {r["batch"]: r["committed_at_ms"] for r in rows}
+        return  # pre-identity marker layout: nothing to key on
+    at = {r["batch"]: r.get("committed_at_ms") for r in rows}
     # establishment events: markers that INTRODUCED their identity
     # (gen_src == own batch id) — transfers are not identity changes
     events = sorted((int(at[b]), s) for b, s in src_of.items()
@@ -1321,14 +1232,11 @@ def payload_subdirs(spark: SparkSession,
     per-index schema registry — postings/sigs/codes/bits/vectors are
     all found, while ``batches/`` (one level), ``meta/``, and
     ``centroids/`` (no batch dirs) never match."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/*/*/batch=*")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    pattern = f"{index_path}/*/*/batch=*"
     subs: dict[str, str] = {}
-    for st in (fs.globStatus(p) or []):
-        coldir = st.getPath().getParent()
-        sub = coldir.getParent().getName()
-        col = coldir.getName().split("=", 1)[0]
+    for st in filesystem.filesystem_for(spark, pattern).glob(pattern):
+        sub, coldir = st.path.rsplit("/", 3)[1:3]
+        col = coldir.split("=", 1)[0]
         if subs.setdefault(sub, col) != col:
             raise ValueError(
                 f"subtree {sub!r} mixes partition columns "
@@ -1409,18 +1317,8 @@ def _compact_locked(spark: SparkSession, index_path: str,
                                    prefix=COMPACT_PREFIX)
     delete_glob(spark, f"{index_path}/*/*/batch={batch_id}")
     delete_glob(spark, f"{_compactions_path(index_path)}/by={batch_id}")
-    delete_glob(spark,
-                f"{_centroids_path(index_path)}/batch={batch_id}")
-    delete_glob(spark, f"{index_path}/codebooks/batch={batch_id}")
-    log_rows = (spark.read.parquet(_log_path(index_path))
-                .filter(F.col("batch").isin(sources)).collect())
-    metrics = {}
-    for r in log_rows:
-        for c, v in r.asDict().items():
-            if c in ("batch", "committed", "committed_at_ms") \
-                    or v is None:
-                continue
-            metrics[c] = metrics.get(c, 0) + int(v)
+    for sub in GENERATION_TABLES:
+        delete_glob(spark, f"{index_path}/{sub}/batch={batch_id}")
     subs = payload_subdirs(spark, index_path)
     if not subs:
         # committing a data-less batch while marking sources replaced
@@ -1441,47 +1339,24 @@ def _compact_locked(spark: SparkSession, index_path: str,
     # "the unique gen-marked batch in my view" — keeps working after
     # the source retires. Tiny payload (K centroid rows).
     gen_sources = centroid_generations(spark, index_path) & set(sources)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    fs = filesystem.filesystem_for(spark, index_path)
     for g in sorted(gen_sources):
-        # gen-scoped dirs are read DIRECTLY (pq._read_centroids's
-        # convention): a legacy index with a crashed half-migrated
-        # centroid layout stays compactable
-        (spark.read.parquet(f"{_centroids_path(index_path)}/batch={g}")
-           .withColumn("batch", F.lit(batch_id))
-           .coalesce(1)
-           .write.mode("append").partitionBy("batch")
-           .parquet(_centroids_path(index_path)))
-        # a generation-scoped codebook table (retrained PQ) rides the
-        # same marker transfer — the absorbing batch becomes the
-        # establisher of the SAME generation for both tables
-        cb = f"{index_path}/codebooks/batch={g}"
-        cbp = jvm.org.apache.hadoop.fs.Path(cb)
-        if cbp.getFileSystem(conf).exists(cbp):
-            (spark.read.parquet(cb)
-               .withColumn("batch", F.lit(batch_id))
-               .coalesce(1)
-               .write.mode("append").partitionBy("batch")
-               .parquet(f"{index_path}/codebooks"))
-        # the generation's drift-calibration record rides the same
-        # transfer (missing it is harmless — the auto gate would just
-        # recalibrate — but carrying it keeps the gate armed)
-        db = f"{index_path}/drift_baseline/batch={g}"
-        dbp = jvm.org.apache.hadoop.fs.Path(db)
-        if dbp.getFileSystem(conf).exists(dbp):
-            (spark.read.parquet(db)
-               .withColumn("batch", F.lit(batch_id))
-               .coalesce(1)
-               .write.mode("append").partitionBy("batch")
-               .parquet(f"{index_path}/drift_baseline"))
-    if not write_meta_rows(spark, _compactions_path(index_path),
-                           [(s,) for s in sources], "replaced string",
-                           partition=("by", batch_id)):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, [(s, batch_id) for s in sources],
-                      "replaced string, by string")
-           .write.mode("append").partitionBy("by")
-           .parquet(_compactions_path(index_path)))
+        # every generation table rides the transfer: the codebooks of a
+        # retrained PQ index, and the drift-calibration record (missing
+        # it is harmless — the auto gate would just recalibrate — but
+        # carrying it keeps the gate armed). Gen-scoped dirs are read
+        # DIRECTLY (pq._read_centroids's convention): a legacy index
+        # with a crashed half-migrated centroid layout stays compactable
+        for sub, ddl in GENERATION_TABLES.items():
+            src = f"{index_path}/{sub}/batch={g}"
+            if fs.exists(src):
+                names = _pa_schema(ddl).names
+                write_meta_rows(
+                    spark, f"{index_path}/{sub}",
+                    [tuple(r.get(n) for n in names)
+                     for r in read_meta_rows(spark, src)],
+                    ddl, partition=("batch", batch_id))
+    metrics = write_replacement(spark, index_path, sources, batch_id)
     log_batch(spark, index_path, batch_id, **metrics)
     clear_intent(spark, index_path, batch_id)
     if purge:
@@ -1531,16 +1406,7 @@ def purge_replaced(spark: SparkSession, index_path: str,
     pairs = _replacements(spark, index_path)
     replaced = _retired(raw, pairs)
     direct_by = {r: by for r, by in pairs}
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _mtime(path_str):
-        p = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = p.getFileSystem(conf)
-        sts = list(fs.globStatus(p) or [])
-        return max((st.getModificationTime() for st in sts),
-                   default=None)
-
+    fs = filesystem.filesystem_for(spark, index_path)
     removed_dirs = 0
     removed_log_rows = 0
     for bid in sorted(replaced & raw):
@@ -1548,8 +1414,8 @@ def purge_replaced(spark: SparkSession, index_path: str,
             by = direct_by.get(bid)
             retired_at = max(
                 (t for t in (
-                    _mtime(f"{_compactions_path(index_path)}/by={by}"),
-                    _mtime(f"{_log_path(index_path)}/batch={by}"))
+                    _mtime(fs, f"{_compactions_path(index_path)}/by={by}"),
+                    _mtime(fs, f"{_log_path(index_path)}/batch={by}"))
                  if t is not None),
                 default=None)
             # unknown retirement time (replacer already purged of both
@@ -1557,24 +1423,14 @@ def purge_replaced(spark: SparkSession, index_path: str,
             # purge cycle old — eligible
             if retired_at is not None and retired_at >= older_than_ms:
                 continue
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/*/*/batch={bid}")
-        fs = p.getFileSystem(conf)
-        dirs = list(fs.globStatus(p) or [])
-        for st in dirs:
-            fs.delete(st.getPath(), True)
-            removed_dirs += 1
-        # a retired generation-establishing batch's centroid (and, for
-        # retrained PQ, codebook) dirs go with its data
-        # (compact/rebalance already transferred the live generation's
-        # marker to the replacing batch); pins into that generation
-        # fail loudly at resolve_generation afterwards
-        removed_dirs += delete_glob(
-            spark, f"{_centroids_path(index_path)}/batch={bid}")
-        removed_dirs += delete_glob(
-            spark, f"{index_path}/codebooks/batch={bid}")
-        removed_dirs += delete_glob(
-            spark, f"{index_path}/drift_baseline/batch={bid}")
+        removed_dirs += delete_glob(spark, f"{index_path}/*/*/batch={bid}")
+        # a retired generation-establishing batch's generation tables
+        # go with its data (compact/rebalance already transferred the
+        # live generation's marker to the replacing batch); pins into
+        # that generation fail loudly at resolve_generation afterwards
+        for sub in GENERATION_TABLES:
+            removed_dirs += delete_glob(
+                spark, f"{index_path}/{sub}/batch={bid}")
         removed_log_rows += delete_glob(
             spark, f"{_log_path(index_path)}/batch={bid}")
     return {"data_dirs_removed": removed_dirs,
@@ -1634,25 +1490,20 @@ def vacuum(spark: SparkSession, index_path: str,
     cutoff = _time.time() * 1000.0 - ttl_seconds * 1000.0
     purged = purge_replaced(spark, index_path, older_than_ms=cutoff)
     committed = batch_sets(spark, index_path)[1]
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    fs = filesystem.filesystem_for(spark, index_path)
 
-    def statuses(pattern):
-        p = jvm.org.apache.hadoop.fs.Path(pattern)
-        fs = p.getFileSystem(conf)
-        return fs, list(fs.globStatus(p) or [])
+    def batch_dirs(bid: str) -> list:
+        # a crashed rebalance's generation-table dirs are artifacts of
+        # its (uncommitted) batch like any payload dir — judged and
+        # deleted with the batch as a unit
+        return [st for pattern in (
+                    f"{index_path}/*/*/batch={bid}",
+                    *(f"{index_path}/{sub}/batch={bid}"
+                      for sub in GENERATION_TABLES))
+                for st in fs.glob(pattern)]
 
-    fs_i, intent_sts = statuses(f"{_intents_path(index_path)}/*")
-    fs_d, data_sts = statuses(f"{index_path}/*/*/batch=*")
-    # a crashed rebalance's centroid (and codebook) generation dirs
-    # are artifacts of its (uncommitted) batch like any payload dir —
-    # judged and deleted with the batch as a unit
-    data_sts = data_sts + statuses(
-        f"{_centroids_path(index_path)}/batch=*")[1]
-    data_sts = data_sts + statuses(
-        f"{index_path}/codebooks/batch=*")[1]
-    data_sts = data_sts + statuses(
-        f"{index_path}/drift_baseline/batch=*")[1]
+    intent_sts = fs.glob(f"{_intents_path(index_path)}/*")
+    data_sts = batch_dirs("*")
 
     # group every artifact of each UNCOMMITTED batch; stale intents of
     # committed batches are removable immediately (data never touched)
@@ -1660,7 +1511,7 @@ def vacuum(spark: SparkSession, index_path: str,
     intent_of: dict[str, object] = {}
     artifacts: dict[str, list] = {}
     for st in intent_sts:
-        bid = st.getPath().getName()
+        bid = st.name
         if bid in committed:
             stale_committed_intents.append(st)
         else:
@@ -1668,7 +1519,7 @@ def vacuum(spark: SparkSession, index_path: str,
             artifacts.setdefault(bid, []).append(st)
     data_of: dict[str, list] = {}
     for st in data_sts:
-        bid = st.getPath().getName().split("=", 1)[1]
+        bid = st.name.split("=", 1)[1]
         if bid in committed:
             continue
         data_of.setdefault(bid, []).append(st)
@@ -1677,7 +1528,7 @@ def vacuum(spark: SparkSession, index_path: str,
     removed_dirs = 0
     removed_intents = 0
     for bid, sts in artifacts.items():
-        if any(st.getModificationTime() >= cutoff for st in sts):
+        if any(st.mtime_ms >= cutoff for st in sts):
             continue  # some artifact is young: the batch may be live
         # TOCTOU re-check immediately before deletion: the upfront
         # snapshot may predate a slow in-flight append's FIRST data
@@ -1691,33 +1542,25 @@ def vacuum(spark: SparkSession, index_path: str,
         # the longest possible append duration (the intent contract).
         if bid in batch_sets(spark, index_path)[1]:
             continue
-        _, fresh = statuses(f"{index_path}/*/*/batch={bid}")
-        fresh = fresh + statuses(
-            f"{_centroids_path(index_path)}/batch={bid}")[1]
-        fresh = fresh + statuses(
-            f"{index_path}/codebooks/batch={bid}")[1]
-        fresh = fresh + statuses(
-            f"{index_path}/drift_baseline/batch={bid}")[1]
-        snap = {str(st.getPath()) for st in data_of.get(bid, [])}
-        if ({str(st.getPath()) for st in fresh} != snap
-                or any(st.getModificationTime() >= cutoff for st in fresh)):
+        fresh = batch_dirs(bid)
+        snap = {st.path for st in data_of.get(bid, [])}
+        if ({st.path for st in fresh} != snap
+                or any(st.mtime_ms >= cutoff for st in fresh)):
             continue
         if bid in intent_of:
-            _, ist = statuses(f"{_intents_path(index_path)}/{bid}")
-            old_mtime = intent_of[bid].getModificationTime()
-            if (not ist
-                    or ist[0].getModificationTime() != old_mtime):
+            now = _mtime(fs, f"{_intents_path(index_path)}/{bid}")
+            if now != intent_of[bid].mtime_ms:
                 continue
         for st in data_of.get(bid, []):
-            fs_d.delete(st.getPath(), True)
+            fs.rm_tree(st.path)
             removed_dirs += 1
         # marker removed LAST, and only with its data gone: a crash
         # mid-vacuum leaves the id reserved over the remaining orphans
         if bid in intent_of:
-            fs_i.delete(intent_of[bid].getPath(), True)
+            fs.rm_tree(intent_of[bid].path)
             removed_intents += 1
     for st in stale_committed_intents:
-        fs_i.delete(st.getPath(), True)
+        fs.rm_tree(st.path)
         removed_intents += 1
     # a compactor that died holding the single-compactor lock would
     # otherwise block compaction until someone notices. Staleness is
@@ -1731,10 +1574,9 @@ def vacuum(spark: SparkSession, index_path: str,
     removed_locks = 0
     for pattern in (f"{index_path}/locks/*.lock",
                     f"{index_path}/locks/*.lock.broken-*"):
-        fs_l, lock_sts = statuses(pattern)
-        for st in lock_sts:
-            if st.getModificationTime() < lock_cutoff:
-                fs_l.delete(st.getPath(), False)
+        for st in fs.glob(pattern):
+            if st.mtime_ms < lock_cutoff:
+                fs.rm_tree(st.path)
                 removed_locks += 1
     return {"data_dirs_removed": removed_dirs + purged["data_dirs_removed"],
             "intents_removed": removed_intents,

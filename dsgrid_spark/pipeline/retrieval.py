@@ -172,13 +172,8 @@ def _df_query_terms(queries: DataFrame, analyzer: str,
 
 
 def _read_stats(spark: SparkSession, path: str) -> dict:
-    """The index's one stats row as a dict — driver-side read when the
-    index is on the local filesystem (indexlog.read_meta_rows, no Spark
-    job; r13), spark.read elsewhere."""
-    rows = indexlog.read_meta_rows(spark, f"{path}/stats")
-    if rows is not None:
-        return rows[0]
-    return spark.read.parquet(f"{path}/stats").collect()[0].asDict()
+    """The index's one stats row as a dict (driver-side read)."""
+    return indexlog.read_meta_rows(spark, f"{path}/stats")[0]
 
 def _postings(df: DataFrame, id_column: str, text_column: str,
               n_buckets: int, positions: bool = False,
@@ -280,11 +275,7 @@ def write_term_index(df: DataFrame, path: str,
                   n_buckets, bool(positions), analyzer)]
     stats_ddl = ("n_docs long, total_tokens long, n_buckets int,"
                  " has_positions boolean, analyzer string")
-    if not indexlog.write_meta_rows(spark, f"{path}/stats", stats_row,
-                                    stats_ddl):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, stats_row, stats_ddl)
-           .write.mode("overwrite").parquet(f"{path}/stats"))
+    indexlog.write_meta_rows(spark, f"{path}/stats", stats_row, stats_ddl)
     indexlog.log_batch(spark, path, indexlog.BASE_BATCH,
                        n_docs=int(totals["n_docs"]),
                        total_tokens=int(totals["total_tokens"]))

@@ -46,6 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dsgrid_spark import filesystem
 from dsgrid_spark.pipeline import indexlog
 from dsgrid_spark.pipeline.dedup import incremental_dedup, minhash_signatures
 
@@ -69,19 +70,10 @@ class ConcurrentBatchError(RuntimeError):
     survivors as registered; re-run under a fresh batch id."""
 
 
-def _read_params(spark: SparkSession, path: str) -> dict:
-    # r13: one meta row — driver-side read (indexlog.read_meta_rows; no
-    # Spark job), spark.read on non-local filesystems
-    rows = indexlog.read_meta_rows(spark, f"{path}/meta")
-    if rows is not None:
-        return rows[0]
-    return spark.read.parquet(f"{path}/meta").collect()[0].asDict()
-
-
 def sig_store_params(spark: SparkSession, path: str) -> dict:
     """The store's signature parameters (num_hashes, shingle_k, seed,
     n_shards) — the values every reader and appender must use."""
-    return _read_params(spark, path)
+    return indexlog.read_meta_rows(spark, f"{path}/meta")[0]
 
 
 def _sig_rows(df: DataFrame, text_column: str, id_column: str,
@@ -124,8 +116,7 @@ def _swap_corpus_batch(spark: SparkSession, path: str, corpus_path: str,
     Raises :class:`ConcurrentBatchError` — with only OUR artifacts
     removed — when the id committed under another writer at any
     check."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    fs = filesystem.filesystem_for(spark, corpus_path)
     tmp = f"{corpus_path}/_tmp.{batch_id}"
     dst = f"{corpus_path}/batch={batch_id}"
     indexlog.delete_glob(spark, tmp)
@@ -147,17 +138,14 @@ def _swap_corpus_batch(spark: SparkSession, path: str, corpus_path: str,
     # uncommitted); a live racer's dir appearing after this delete
     # makes the rename nest, which the post-swap check unwinds
     indexlog.delete_glob(spark, dst)
-    tp = jvm.org.apache.hadoop.fs.Path(tmp)
-    dp = jvm.org.apache.hadoop.fs.Path(dst)
-    fs = tp.getFileSystem(conf)
-    renamed = fs.rename(tp, dp)
+    renamed = fs.rename(tmp, dst)
     if _committed_elsewhere() or not renamed:
         # unwind OUR artifacts only: the clean-rename dir is wholly
-        # ours; a nested rename (dst existed) left ours inside it
-        nested = jvm.org.apache.hadoop.fs.Path(
-            f"{dst}/_tmp.{batch_id}")
+        # ours; a nested rename (Hadoop moves into an existing dst)
+        # left ours inside it
+        nested = f"{dst}/_tmp.{batch_id}"
         if fs.exists(nested):
-            fs.delete(nested, True)
+            fs.rm_tree(nested)
         elif renamed:
             indexlog.delete_glob(spark, dst)
         indexlog.delete_glob(spark, tmp)
@@ -210,11 +198,7 @@ def write_sig_store(df: DataFrame, path: str, text_column: str = "text",
                             mode="overwrite")
     meta_ddl = "num_hashes int, shingle_k int, seed int, n_shards int"
     meta_row = [(num_hashes, shingle_k, seed, n_shards)]
-    if not indexlog.write_meta_rows(spark, f"{path}/meta", meta_row,
-                                    meta_ddl):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, meta_row, meta_ddl)
-           .write.mode("overwrite").parquet(f"{path}/meta"))
+    indexlog.write_meta_rows(spark, f"{path}/meta", meta_row, meta_ddl)
     indexlog.log_batch(spark, path, indexlog.BASE_BATCH)
 
 
@@ -240,7 +224,7 @@ def append_sig_store(df: DataFrame, path: str,
         # replayed batch: already fully ingested (possibly since
         # compacted away -- its rows live on in the compacted batch)
         return False
-    params = _read_params(spark, path)
+    params = sig_store_params(spark, path)
     indexlog.delete_glob(spark, f"{path}/sigs/shard=*/batch={batch_id}")
     rows = _sig_rows(df, text_column, id_column, params, batch_id,
                      signatures)
@@ -346,7 +330,7 @@ def ingest_dedup_batch(new_df: DataFrame, path: str,
         kept = (read_sig_store(spark, path, id_column)
                 .select(id_column).distinct())
         return new_df.join(kept, id_column, "left_semi")
-    params = _read_params(spark, path)
+    params = sig_store_params(spark, path)
     if reference_df is None:
         reference_df = read_corpus(spark, path, corpus_path)
     ref_sigs = read_sig_store(spark, path, id_column)

@@ -1226,30 +1226,19 @@ def write_centroid_generation(spark, path: str,
     makes a rebalance's new centroids visible ATOMICALLY at its log
     commit — the centroid dirs themselves are immutable per generation.
     """
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
     # gen_src is the generation's IDENTITY: the establishing batch id.
     # compact()'s marker transfer copies rows verbatim (new batch,
     # same gen_src), so two markers are the same generation exactly
     # when their gen_src matches — what resolve_generation's pin
-    # validation keys on.
-    # r13: the centroid table is driver-bounded by construction (it
-    # arrives as a Python list), so it writes driver-side when local
-    # (indexlog.write_meta_rows — no Spark job per generation flip).
-    # mode="overwrite" reproduces the static-overwrite semantics (the
-    # whole centroids base dir is replaced) before the partition lands.
+    # validation keys on. The table is driver-bounded by construction
+    # (it arrives as a Python list). mode="overwrite" replaces the
+    # whole centroids base dir before the partition lands.
     if mode == "overwrite":
         indexlog.delete_glob(spark, f"{path}/centroids")
-    if indexlog.write_meta_rows(
-            spark, f"{path}/centroids",
-            [(i, c, gen) for i, c in rows],
-            "cluster int, centroid array<double>, gen_src string",
-            partition=("batch", gen)):
-        return
-    (_osdf(spark, rows, "cluster int, centroid array<double>")
-       .withColumn("gen_src", F.lit(gen))
-       .withColumn("batch", F.lit(gen))
-       .write.mode(mode).partitionBy("batch")
-       .parquet(f"{path}/centroids"))
+    indexlog.write_meta_rows(
+        spark, f"{path}/centroids",
+        [(i, [float(x) for x in c], gen) for i, c in enumerate(centroids)],
+        indexlog.GENERATION_TABLES["centroids"], partition=("batch", gen))
 
 
 def write_ivf_index(df: DataFrame, path: str,
@@ -1573,13 +1562,7 @@ def write_binary_index(df: DataFrame, path: str,
                 "vectors_dtype string")
     meta_row = [(dim, BINARY_WORD_BITS, bool(store_vectors),
                  vectors_dtype)]
-    # r13: driver-side metadata write (indexlog.write_meta_rows — no
-    # Spark job); the Spark write remains the non-local path
-    if not indexlog.write_meta_rows(spark, f"{path}/meta", meta_row,
-                                    meta_ddl):
-        from dsgrid_spark.session import one_slice_df
-        (one_slice_df(spark, meta_row, meta_ddl)
-           .write.mode("overwrite").parquet(f"{path}/meta"))
+    indexlog.write_meta_rows(spark, f"{path}/meta", meta_row, meta_ddl)
     indexlog.log_batch(spark, path, indexlog.BASE_BATCH)
 
 
